@@ -58,7 +58,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = "spark.sql.legacy.parquet.nanosAsLong"
         if spark.conf.get(key, "false") != "true":
             spark.conf.set(key, "true")
-        df = spark.read.parquet(path)
+        schema = footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         t = df.schema["ts"].dataType
         if isinstance(t, T.LongType):
             # nanos-long → micros. `div` truncates toward zero, which is
@@ -81,6 +83,79 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             raise TypeError(f"events.ts: unexpected parquet dtype {t}")
         return df.withColumn("ts_us", ts_us)
     return spark.read.parquet(path)
+
+
+# Arrow types of a parquet footer -> the Spark types Spark's own inference
+# gives them (timestamps are mapped separately, see footer_schema).
+_ARROW_TO_SPARK = {
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "large_string": T.StringType(),
+}
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema of a single parquet file, read from its footer
+    with pyarrow — ``spark.read.parquet`` without a schema runs a Spark job
+    to infer it, so every plan built over the table would launch one.
+
+    Timestamps map the way Spark reads them with ``nanosAsLong`` set:
+    legacy INT96 → TIMESTAMP, NANOS → BIGINT, other UTC-adjusted units →
+    TIMESTAMP, the rest → TIMESTAMP_NTZ. Returns None (the caller falls back to inference) for a
+    directory, a remote path or any type outside the flat mapping above.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(path):
+        return None
+    with pq.ParquetFile(path) as pf:
+        arrow, physical = pf.schema_arrow, pf.schema
+    fields = []
+    for i, f in enumerate(arrow):
+        if pa.types.is_timestamp(f.type):
+            if physical.column(i).physical_type == "INT96":
+                dtype = T.TimestampType()
+            elif f.type.unit == "ns":
+                dtype = T.LongType()
+            elif f.type.tz:
+                dtype = T.TimestampType()
+            else:
+                dtype = T.TimestampNTZType()
+        else:
+            dtype = _ARROW_TO_SPARK.get(str(f.type))
+            if dtype is None:
+                return None
+        fields.append(T.StructField(f.name, dtype, True))
+    return T.StructType(fields)
+
+
+def events_before(spark: SparkSession, sf_dir: str, day: str) -> DataFrame:
+    """``events`` with ``ts_us`` before midnight UTC of ``day`` (YYYY-MM-DD).
+
+    The bound is stated twice: exactly on ``ts_us``, and on the raw ``ts``
+    column in its own type so the parquet reader can push it down and skip
+    row groups. The raw bound is implied by the exact one on every ``ts``
+    encoding (nanos are truncated to micros, so ``ts_us < c`` implies
+    ``ts < 1000 c``), so it never drops a row the exact bound keeps.
+    """
+    import datetime as dt
+
+    cutoff_us = int(
+        dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc).timestamp()
+    ) * 1_000_000
+    df = table(spark, sf_dir, "events")
+    t = df.schema["ts"].dataType
+    if isinstance(t, T.LongType):
+        raw = F.col("ts") < F.lit(cutoff_us * 1000)
+    elif isinstance(t, T.TimestampNTZType):
+        raw = F.col("ts") < F.expr(f"TIMESTAMP_NTZ '{day} 00:00:00'")
+    else:
+        raw = F.col("ts") < F.expr(f"timestamp_micros({cutoff_us})")
+    return df.filter(raw & (F.col("ts_us") < F.lit(cutoff_us)))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -7,11 +7,30 @@ VAL_1..15 / STR_1..15) and UPDATE a per-farm summary row (``TS_INS_WEEK``)
 (``/root/reference/src/weekly/async_processor.py:103-224``,
 ``docs/db/ins/02_TABLE.md:301-459``).
 
-Here every section is computed for ALL farms in one DataFrame plan —
+Here both tables come from one shared plan over ALL farms:
+
+1. **One events scan**, bounded at the report cutoff (midnight after
+   ``dt_to``): no section reads anything later.
+2. **One per-user pass.** The rows are partitioned by ``user_id`` once,
+   and one window pass tags every row with the per-user facts the
+   sections need: is it the user's last non-click event (herd status,
+   alert delay, schedule base, delay KPI), the user's last mating day
+   strictly before it (accident bands), and is it the user's first wean of
+   the week, with the event that follows it (next-event rollup).
+3. **One per-farm aggregate.** A single ``groupBy(farm_no)`` computes every
+   count-shaped section (MD, ALERT, GB, BM, EU, SG, SH, SCHEDULE, CONFIG)
+   as conditional aggregates. The wide rows are an unpivot of that row;
+   the summary row is a projection of it.
+4. DOPE, which ranks users inside a farm, is the one side aggregate, read
+   from the same ``user_id`` partitioning.
+
 ``groupBy(farm_no)`` replaces the thread pool, so 4-way driver parallelism
 becomes cluster-wide task parallelism, and the idempotent re-run is a
-partition overwrite of the (master_seq, farm_no) slice instead of
-DELETE+INSERT.
+replace of the (master_seq, farm_no) slice instead of DELETE+INSERT.
+Nothing is persisted: both tables are lazy children of the same plan.
+The ~150 expressions are written as SQL text: composing each from Column
+calls costs a py4j round trip per node, which added up to seconds of
+planning time per build.
 
 Synthetic mapping: the events stream is the work history; ``farm_no =
 user_id % 10`` partitions users into farms; the UD1 status table and the
@@ -21,13 +40,15 @@ section (gubun='SH').
 
 from __future__ import annotations
 
+from datetime import date, timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inspig_etl_spark.functions.dates import date_spine, to_yyyymmdd, us_to_day
-from inspig_etl_spark.functions.rounding import dec_sum
+from inspig_etl_spark.functions.rounding import sql_dec_sum
+from inspig_etl_spark.operators.schedule import DEFAULT_RULES
 from inspig_etl_spark.operators.status import (
-    status_from_last_event,
+    sql_status_from_last_event,
     STATUS_ABORTED,
     STATUS_CANDIDATE,
     STATUS_NURSING,
@@ -38,7 +59,7 @@ from inspig_etl_spark.operators.status import (
 )
 
 # The full reference output width. Sections fill what they use; the rest
-# pads with typed NULLs so every section unions into one sink schema.
+# pads with typed NULLs so every section lands in one sink schema.
 N_WIDE = 15
 STATUS_SPINE = (
     STATUS_CANDIDATE,
@@ -70,13 +91,43 @@ ALERT_BANDS = (
 )
 DOPE_PER_ROW = 3  # culling page width (reference uses 15; 3 exercises paging)
 CONFIG_WEEKS = 3  # trailing full weeks feeding the config ratio mean
+# Summary family of each schedule task: mating (g), farrowing (b), and
+# wean/accident follow-up (ef).
+SCHEDULE_FAMILY = {
+    "preg_check_1": "g", "preg_check_2": "g", "pre_farrow_move": "g",
+    "piglet_care": "b", "wean_plan": "b",
+    "remate_check": "ef", "recheck": "ef",
+}
+
+# The fields of one unpivoted wide row and their sink types (every other
+# wide column is NULL for the farm-aggregate sections).
+_ROW_TYPES = {
+    "gubun": "STRING",
+    "sub_gubun": "STRING",
+    "sort_no": "INT",
+    "code_1": "STRING",
+    "str_1": "STRING",
+    **{f"cnt_{i}": "BIGINT" for i in range(1, 9)},
+    "val_1": "DOUBLE",
+    "keep": "BOOLEAN",
+}
 
 
 def _shift(day: str, days: int) -> str:
     """YYYY-MM-DD ± days (driver-side window arithmetic)."""
-    from datetime import date, timedelta
-
     return (date.fromisoformat(day) + timedelta(days=days)).isoformat()
+
+
+def _days(dt_from: str, dt_to: str) -> int:
+    return (date.fromisoformat(dt_to) - date.fromisoformat(dt_from)).days + 1
+
+
+def _in(lo: str, hi: str) -> str:
+    return f"event_day BETWEEN DATE '{lo}' AND DATE '{hi}'"
+
+
+def _q(s: str) -> str:
+    return f"'{s}'"
 
 
 def wide_row_columns() -> list[str]:
@@ -87,637 +138,277 @@ def wide_row_columns() -> list[str]:
     return cols
 
 
-def to_wide_rows(
-    section: DataFrame,
-    master_seq: int,
-    gubun: str,
-    sub_gubun: str,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Pad a section's used columns out to the wide-row schema.
+def to_wide_rows(section: DataFrame, master_seq: int) -> DataFrame:
+    """Stamp ``master_seq`` and pad a section out to the wide-row schema.
 
-    ``section`` must carry farm_no + sort_no and any of code_1/2, cnt_i,
-    val_i, str_i it fills; everything absent becomes a typed NULL.
-
-    ``columns`` (optional) restricts the output to a subset of
-    :func:`wide_row_columns` IN THAT CANONICAL ORDER — callers that only
-    consume part of the width (the sections query reads 17 of the 52
-    columns) should pass it: 10 union branches x 35 dead NULL projections
-    is pure Catalyst-analysis weight on every plan build (r16; the values
-    of the kept columns are identical either way).
+    ``section`` carries farm_no, gubun, sub_gubun, sort_no and any of
+    code_1/2, cnt_i, val_i, str_i it fills; everything absent becomes a
+    typed NULL.
     """
     have = set(section.columns)
-    keep = set(columns) if columns is not None else None
-    out = []
-
-    def _add(name: str, expr: F.Column) -> None:
-        if keep is None or name in keep:
-            out.append(expr)
-
-    _add("master_seq", F.lit(master_seq).cast("bigint").alias("master_seq"))
-    _add("farm_no", F.col("farm_no").cast("bigint"))
-    _add("gubun", F.lit(gubun).alias("gubun"))
-    _add("sub_gubun", F.lit(sub_gubun).alias("sub_gubun"))
-    _add("sort_no", F.col("sort_no").cast("int"))
-    for c in ["code_1", "code_2"]:
-        _add(
-            c,
-            F.col(c).cast("string").alias(c) if c in have else F.lit(None).cast("string").alias(c),
-        )
-    for i in range(1, N_WIDE + 1):
-        c = f"cnt_{i}"
-        _add(
-            c,
-            F.col(c).cast("bigint").alias(c) if c in have else F.lit(None).cast("bigint").alias(c),
-        )
-    for i in range(1, N_WIDE + 1):
-        c = f"val_{i}"
-        _add(
-            c,
-            F.col(c).cast("double").alias(c) if c in have else F.lit(None).cast("double").alias(c),
-        )
-    for i in range(1, N_WIDE + 1):
-        c = f"str_{i}"
-        _add(
-            c,
-            F.col(c).cast("string").alias(c) if c in have else F.lit(None).cast("string").alias(c),
-        )
-    return section.select(*out)
+    types = {"master_seq": "BIGINT", "farm_no": "BIGINT", "sort_no": "INT"}
+    exprs = []
+    for c in wide_row_columns():
+        t = types.get(c) or {"cnt": "BIGINT", "val": "DOUBLE"}.get(c[:3], "STRING")
+        src = str(master_seq) if c == "master_seq" else c if c in have else "NULL"
+        exprs.append(f"CAST({src} AS {t}) AS {c}")
+    return section.selectExpr(*exprs)
 
 
-def _farm(col: F.Column) -> F.Column:
-    return (col % 10).cast("bigint")
+def _tagged_events(spark: SparkSession, sf_dir: str, dt_from: str, dt_to: str) -> DataFrame:
+    """Steps 1 and 2: every event before the cutoff, partitioned by user,
+    with its farm, its last-work attributes and the per-user facts.
 
-
-def herd_status_section(last_events_status: DataFrame) -> DataFrame:
-    """gubun='MD': per farm, zero-filled status crosstab rows (A15 shape).
-
-    Input: (user_id, status_cd) — the UD1 output. One row per (farm,
-    status) with a fixed sort order, zeros kept (``modon.py:222-243``).
+    ``is_last``: the user's latest non-click event by (ts, event_id).
+    ``last_mate_day``: the day of the user's latest purchase strictly
+    earlier in time — an accident never sees a purchase at its own
+    timestamp. Purchase days only grow with time, so the latest is the max
+    over a range frame.
+    ``is_first_wean`` / ``next_type``: the user's first signup of the week
+    and the event type right after it. The scan ends at the cutoff, so the
+    full-history ``lead`` only ever sees events dated up to ``dt_to``.
     """
-    counts = (
-        last_events_status.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", "status_cd")
-        .agg(F.count(F.lit(1)).alias("cnt_1"))
+    from inspig_etl_spark.catalog import events_before
+    from inspig_etl_spark.queries.status_schedule import last_event_columns
+
+    ev = events_before(spark, sf_dir, _shift(dt_to, 1)).repartition("user_id")
+    wean = f"event_type = 'signup' AND {_in(dt_from, dt_to)}"
+    seq = "PARTITION BY user_id ORDER BY ts_us, event_id"
+    # farm_no is derived above the window, so a farm filter on either
+    # report (the on-demand path) is rewritten onto user_id, the window's
+    # partition key, and pushed down to the scan.
+    return ev.select(
+        "user_id", "event_id", "ts_us", "event_type", "value", *last_event_columns()
+    ).selectExpr(
+        "*",
+        "event_type <> 'click' AND struct(ts_us, event_id) = max("
+        "IF(event_type <> 'click', struct(ts_us, event_id), NULL)) "
+        "OVER (PARTITION BY user_id) AS is_last",
+        "max(IF(event_type = 'purchase', event_day, NULL)) OVER (PARTITION BY user_id "
+        "ORDER BY ts_us RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_mate_day",
+        f"{wean} AND count_if({wean}) OVER ({seq} ROWS BETWEEN UNBOUNDED PRECEDING "
+        "AND CURRENT ROW) = 1 AS is_first_wean",
+        f"lead(event_type) OVER ({seq}) AS next_type",
+    ).selectExpr("*", "CAST(user_id % 10 AS BIGINT) AS farm_no")
+
+
+def _farm_aggregate(tagged: DataFrame, dt_from: str, dt_to: str) -> DataFrame:
+    """Step 3: one row per farm with an event before the cutoff, carrying
+    every section's counters as conditional aggregates."""
+    this_from = _shift(dt_to, 1)
+    status = sql_status_from_last_event("wk_gubun", "sago_gubun_cd", "daeri_yn", "NULL")
+    facts = tagged.selectExpr(
+        "farm_no", "event_type", "value", "event_day", "is_last", "is_first_wean",
+        "next_type", "wk_gubun",
+        f"{_in(dt_from, dt_to)} AS in_week",
+        f"{status} AS status_cd",
+        f"date_diff(DATE '{this_from}', event_day) AS delay",
+        "'V' || CAST(CAST(greatest(least(floor(value / 100), 4), 0) AS INT) AS STRING)"
+        " AS bucket",
+        "CASE WHEN last_mate_day IS NULL THEN 'NONE'"
+        " WHEN date_diff(event_day, last_mate_day) <= 1 THEN 'D0_1'"
+        " WHEN date_diff(event_day, last_mate_day) <= 3 THEN 'D2_3'"
+        " WHEN date_diff(event_day, last_mate_day) <= 7 THEN 'D4_7'"
+        " ELSE 'D8P' END AS band",
     )
-    farms = last_events_status.select(
-        _farm(F.col("user_id")).alias("farm_no")
-    ).distinct()
-    spine_rows = [(i + 1, s) for i, s in enumerate(STATUS_SPINE)]
-    spine = farms.sparkSession.createDataFrame(spine_rows, "sort_no INT, status_cd STRING")
-    full = farms.crossJoin(F.broadcast(spine))
-    return (
-        full.join(counts, ["farm_no", "status_cd"], "left")
-        .select(
-            "farm_no",
-            "sort_no",
-            F.col("status_cd").alias("code_1"),
-            F.coalesce(F.col("cnt_1"), F.lit(0)).alias("cnt_1"),
-        )
+    buy = "in_week AND event_type = 'purchase'"
+
+    def money(cond: str) -> str:
+        return f"round({sql_dec_sum(f'IF({cond}, value, NULL)', 6)}, 6)"
+
+    aggs = {"n_last": "count_if(is_last)", "last_day_max": "max(IF(is_last, event_day, NULL))"}
+    aggs.update(
+        {f"md_{i}": f"count_if(is_last AND status_cd = '{s}')" for i, s in enumerate(STATUS_SPINE, 1)}
     )
+    aggs.update(
+        {f"alert_{n}": f"count_if(is_last AND delay BETWEEN {lo} AND {hi})"
+         for n, _code, lo, hi in ALERT_BANDS}
+    )
+    aggs.update({f"wk_{t}": f"count_if(in_week AND event_type = '{t}')" for t in EU_NEXT_TYPES})
+    aggs["prior_view"] = (
+        f"count_if(event_type = 'view' AND {_in(_shift(dt_from, -7), _shift(dt_from, -1))})"
+    )
+    aggs["week_value"] = money(buy)
+    aggs.update(
+        {f"gb_{i}": f"count_if({buy} AND value IS NOT NULL AND bucket = '{b}')"
+         for i, b in enumerate(GB_BUCKETS, 1)}
+    )
+    aggs.update(
+        {f"eu_{i}": f"count_if(is_first_wean AND next_type = '{t}')"
+         for i, t in enumerate(EU_NEXT_TYPES, 1)}
+    )
+    aggs.update(
+        {f"sg_{i}": f"count_if(in_week AND event_type = 'error' AND band = '{b}')"
+         for i, b in enumerate(SG_BANDS, 1)}
+    )
+    for i in range(1, _days(dt_from, dt_to) + 1):
+        day = f"{buy} AND event_day = DATE '{_shift(dt_from, i - 1)}'"
+        aggs[f"sh_cnt_{i}"] = f"count_if({day})"
+        aggs[f"sh_val_{i}"] = money(day)
+    config_from = _shift(dt_to, -(7 * CONFIG_WEEKS - 1))
+    for k in range(CONFIG_WEEKS):
+        wk = _in(_shift(config_from, 7 * k), _shift(config_from, 7 * k + 6))
+        aggs[f"cfg_gb_{k}"] = f"count_if({wk} AND event_type = 'purchase')"
+        aggs[f"cfg_all_{k}"] = f"count_if({wk})"
+    # SCHEDULE (UD2 rule expansion): a last event of work code g lands rule
+    # (g, pass_day) on day i of the coming week iff event_day is that day
+    # minus pass_day.
+    for seq, g, _nm, _std, pass_day in DEFAULT_RULES:
+        for i in range(1, 8):
+            base = _shift(this_from, i - 1 - pass_day)
+            aggs[f"sched_{seq}_{i}"] = (
+                f"count_if(is_last AND wk_gubun = '{g}' AND event_day = DATE '{base}')"
+            )
+    return facts.groupBy("farm_no").agg(
+        F.expr("struct(" + ", ".join(f"{e} AS {n}" for n, e in aggs.items()) + ") AS a")
+    ).select("farm_no", "a.*")
 
 
-def shipment_chart_section(
-    events: DataFrame, dt_from: str = WEEK_FROM, dt_to: str = WEEK_TO
-) -> DataFrame:
-    """gubun='SH': per farm, per-day calendar chart rows over the report
-    period (J10 shape; defaults to the module's fixed test week).
+def _sched_total(seq: int) -> str:
+    return "(" + " + ".join(f"sched_{seq}_{i}" for i in range(1, 8)) + ")"
 
-    Missing days KEPT as NULL rows — the reference's charts distinguish
-    no-data days from zero days (``shipment.py:241-291``).
+
+def _row(keep: str = "true", **values: object) -> str:
+    """One unpivoted wide row: a named_struct of every ``_ROW_TYPES`` field
+    (values are SQL snippets), NULL where the section fills nothing."""
+    values["keep"] = keep
+    return "named_struct(" + ", ".join(
+        f"'{f}', CAST({values.get(f, 'NULL')} AS {t})" for f, t in _ROW_TYPES.items()
+    ) + ")"
+
+
+def _unpivot(farms: DataFrame, dt_from: str, dt_to: str) -> DataFrame:
+    """The count-shaped sections as wide rows, one struct per row.
+
+    Farm sets follow the sections' sources: MD only for farms with a last
+    event, SCHEDULE only for (farm, task) pairs with a task, every other
+    section for every farm of the aggregate. SH keeps NULL for a day with
+    no purchases; CONFIG averages only the weeks that have events.
     """
-    spark = events.sparkSession
-    purchases = events.filter(
-        (F.col("event_type") == "purchase")
-        & (us_to_day(F.col("ts_us")) >= F.lit(dt_from).cast("date"))
-        & (us_to_day(F.col("ts_us")) <= F.lit(dt_to).cast("date"))
+    rows = [
+        _row("n_last > 0", gubun="'MD'", sub_gubun="'STAT'", sort_no=i, code_1=_q(s),
+             cnt_1=f"md_{i}")
+        for i, s in enumerate(STATUS_SPINE, 1)
+    ]
+    rows += [
+        _row(gubun="'ALERT'", sub_gubun="'STAT'", sort_no=n, code_1=_q(code), cnt_1=f"alert_{n}")
+        for n, code, _lo, _hi in ALERT_BANDS
+    ]
+    rows += [
+        _row(gubun=_q(g), sub_gubun="'STAT'", sort_no=i, code_1=_q(code), cnt_1=f"{g.lower()}_{i}")
+        for g, spine in (("GB", GB_BUCKETS), ("EU", EU_NEXT_TYPES), ("SG", SG_BANDS))
+        for i, code in enumerate(spine, 1)
+    ]
+    rows.append(
+        _row(gubun="'BM'", sub_gubun="'STAT'", sort_no=1, cnt_1="wk_view",
+             cnt_2="prior_view", cnt_3="wk_view - prior_view")
     )
-    daily = (
-        purchases.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", us_to_day(F.col("ts_us")).alias("d"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt_1"),
-            F.round(dec_sum(F.col("value"), 6), 6).alias("val_1"),
-        )
+    rows += [
+        _row(gubun="'SH'", sub_gubun="'CHART'", sort_no=i,
+             str_1=_q(_shift(dt_from, i - 1).replace("-", "")),
+             cnt_1=f"IF(sh_cnt_{i} > 0, sh_cnt_{i}, NULL)", val_1=f"sh_val_{i}")
+        for i in range(1, _days(dt_from, dt_to) + 1)
+    ]
+    rows += [
+        _row(f"{_sched_total(seq)} > 0", gubun="'SCHEDULE'", sub_gubun="'ROW'", sort_no=seq,
+             code_1=_q(nm), str_1=_q(std), cnt_8=_sched_total(seq),
+             **{f"cnt_{i}": f"sched_{seq}_{i}" for i in range(1, 8)})
+        for seq, _g, nm, std, _pd in DEFAULT_RULES
+    ]
+    # ratio_e4 = purchases * 10000 DIV events per trailing week, over the
+    # weeks that have events; cnt_1 counts those weeks and cnt_2 is the
+    # integer mean of their ratios (exact BIGINT math on both engines).
+    weeks = " + ".join(f"IF(cfg_all_{k} > 0, 1, 0)" for k in range(CONFIG_WEEKS))
+    ratios = " + ".join(
+        f"IF(cfg_all_{k} > 0, cfg_gb_{k} * 10000 DIV cfg_all_{k}, 0)"
+        for k in range(CONFIG_WEEKS)
     )
-    farms = events.select(_farm(F.col("user_id")).alias("farm_no")).distinct()
-    days = date_spine(spark, dt_from, dt_to, "d").withColumn(
-        "sort_no", F.date_diff(F.col("d"), F.lit(dt_from).cast("date")) + 1
+    rows.append(
+        _row(gubun="'CONFIG'", sub_gubun="'STAT'", sort_no=1, cnt_1=weeks,
+             cnt_2=f"IF({weeks} > 0, ({ratios}) DIV ({weeks}), NULL)")
     )
-    full = farms.crossJoin(F.broadcast(days))
-    return full.join(daily, ["farm_no", "d"], "left").select(
-        "farm_no",
-        "sort_no",
-        to_yyyymmdd(F.col("d")).alias("str_1"),
-        "cnt_1",
-        "val_1",
-    )
+    return farms.selectExpr("farm_no", f"inline(array({', '.join(rows)}))").filter("keep")
 
 
-def _farm_spine(events: DataFrame) -> DataFrame:
-    """Every farm present in the stream — the zero-fill left side shared by
-    all per-farm sections (one distinct over a 10-value derived key)."""
-    return events.select(_farm(F.col("user_id")).alias("farm_no")).distinct()
-
-
-def _zero_filled_counts(
-    counted: DataFrame, farms: DataFrame, spine_rows: list[tuple[int, str]]
-) -> DataFrame:
-    """farms × literal code spine, left-joined to (farm_no, code_1, cnt_1)
-    counts with COALESCE 0 — the A10/A15 zero-fill shape every STAT section
-    shares. ``spine_rows`` = [(sort_no, code_1), ...]."""
-    spine = farms.sparkSession.createDataFrame(
-        spine_rows, "sort_no INT, code_1 STRING"
-    )
-    full = farms.crossJoin(F.broadcast(spine))
-    return full.join(counted, ["farm_no", "code_1"], "left").select(
-        "farm_no",
-        "sort_no",
-        "code_1",
-        F.coalesce(F.col("cnt_1"), F.lit(0)).alias("cnt_1"),
-    )
-
-
-def _week(events: DataFrame, dt_from: str, dt_to: str) -> DataFrame:
-    d = us_to_day(F.col("ts_us"))
-    return events.filter(
-        (d >= F.lit(dt_from).cast("date")) & (d <= F.lit(dt_to).cast("date"))
-    )
-
-
-def mating_histogram_section(
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-    farms: DataFrame | None = None,
-) -> DataFrame:
-    """gubun='GB': last week's mating (purchase, wk 'G') value histogram —
-    floor(value/100) clamped to [0,4], zero-filled per farm (A10; reference
-    ``mating.py`` parity histogram)."""
-    g = _week(events, dt_from, dt_to).filter(
-        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-    )
-    bucket = F.concat(
-        F.lit("V"),
-        F.greatest(
-            F.least(F.floor(F.col("value") / 100), F.lit(4)), F.lit(0)
-        ).cast("int").cast("string"),
-    )
-    counts = (
-        g.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", bucket.alias("code_1"))
-        .agg(F.count(F.lit(1)).alias("cnt_1"))
-    )
-    spine = [(i + 1, b) for i, b in enumerate(GB_BUCKETS)]
-    if farms is None:
-        farms = _farm_spine(events)
-    return _zero_filled_counts(counts, farms, spine)
-
-
-def farrowing_wow_section(
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-    farms: DataFrame | None = None,
-) -> DataFrame:
-    """gubun='BM': farrowing (view, wk 'B') week-over-week — last week's
-    count, the prior week's, and the delta, one row per farm (A17)."""
-    prior_from, prior_to = _shift(dt_from, -7), _shift(dt_from, -1)
-    b = events.filter(F.col("event_type") == "view")
-    d = us_to_day(F.col("ts_us"))
-    counts = (
-        b.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(
-            F.count(
-                F.when(
-                    (d >= F.lit(dt_from).cast("date"))
-                    & (d <= F.lit(dt_to).cast("date")),
-                    1,
-                )
-            ).alias("cnt_1"),
-            F.count(
-                F.when(
-                    (d >= F.lit(prior_from).cast("date"))
-                    & (d <= F.lit(prior_to).cast("date")),
-                    1,
-                )
-            ).alias("cnt_2"),
-        )
-    )
-    if farms is None:
-        farms = _farm_spine(events)
-    return (
-        farms
-        .join(counts, "farm_no", "left")
-        .select(
-            "farm_no",
-            F.lit(1).alias("sort_no"),
-            F.coalesce(F.col("cnt_1"), F.lit(0)).alias("cnt_1"),
-            F.coalesce(F.col("cnt_2"), F.lit(0)).alias("cnt_2"),
-            (F.coalesce(F.col("cnt_1"), F.lit(0)) - F.coalesce(F.col("cnt_2"), F.lit(0))).alias("cnt_3"),
-        )
-    )
-
-
-def weaning_next_event_section(
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-    farms: DataFrame | None = None,
-) -> DataFrame:
-    """gubun='EU': what follows a weaning — per user, the event right after
-    their FIRST wean (signup, wk 'E') inside the week; counted per farm by
-    next-event type, zero-filled over the type spine (W5/A9; reference
-    ``weaning.py`` next-work rollup)."""
-    from pyspark.sql import Window
-
-    wk = _week(events, dt_from, dt_to)
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    # Both windows share the user_id shuffle; the (user, type) partition is
-    # a sub-partition of it, so no second exchange is planned.
-    seq = wk.withColumn("next_type", F.lead("event_type").over(w)).withColumn(
-        "srn",
-        F.row_number().over(
-            Window.partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
-        ),
-    )
-    first_wean_next = seq.filter(
-        (F.col("event_type") == "signup")
-        & (F.col("srn") == 1)
-        & F.col("next_type").isNotNull()
-    )
-    counts = (
-        first_wean_next.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", F.col("next_type").alias("code_1"))
-        .agg(F.count(F.lit(1)).alias("cnt_1"))
-    )
-    spine = [(i + 1, t) for i, t in enumerate(EU_NEXT_TYPES)]
-    if farms is None:
-        farms = _farm_spine(events)
-    return _zero_filled_counts(counts, farms, spine)
-
-
-def accident_elapsed_section(
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-    farms: DataFrame | None = None,
-) -> DataFrame:
-    """gubun='SG': accidents (error, wk 'F') in the week, bucketed by days
-    elapsed since the sow's last mating (purchase) — as-of join (J4, single
-    scan) then banded counts with zero-fill (A10; reference ``accident.py``
-    elapsed/gyungil buckets)."""
-    from inspig_etl_spark.operators.events import asof_value_single_scan
-
-    ev = events.filter(F.col("event_type").isin("error", "purchase"))
-    joined = asof_value_single_scan(
-        ev,
-        keys=["user_id"],
-        ts="ts_us",
-        is_left=F.col("event_type") == "error",
-        right_val=us_to_day(F.col("ts_us")),
-        tiebreak=["event_id"],
-        strict=True,
-        out="last_mate_day",
-    )
-    d = us_to_day(F.col("ts_us"))
-    errs = joined.filter(
-        (d >= F.lit(dt_from).cast("date")) & (d <= F.lit(dt_to).cast("date"))
-    )
-    gap = F.date_diff(d, F.col("last_mate_day"))
-    band = (
-        F.when(F.col("last_mate_day").isNull(), "NONE")
-        .when(gap <= 1, "D0_1")
-        .when(gap <= 3, "D2_3")
-        .when(gap <= 7, "D4_7")
-        .otherwise("D8P")
-    )
-    counts = (
-        errs.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", band.alias("code_1"))
-        .agg(F.count(F.lit(1)).alias("cnt_1"))
-    )
-    spine = [(i + 1, b) for i, b in enumerate(SG_BANDS)]
-    if farms is None:
-        farms = _farm_spine(events)
-    return _zero_filled_counts(counts, farms, spine)
-
-
-def culling_pages_section(
-    events: DataFrame, dt_from: str = WEEK_FROM, dt_to: str = WEEK_TO
-) -> DataFrame:
+def _culling_pages(tagged: DataFrame, dt_from: str, dt_to: str) -> DataFrame:
     """gubun='DOPE': last week's culls (click, wk 'Z') per user, ordered by
     count desc with the farm total PINNED last (T3), paginated into
     ``DOPE_PER_ROW``-wide rows per farm (T4; reference ``culling.py:264-312``
-    15-per-row pages)."""
-    from pyspark.sql import Window
+    15-per-row pages). Only farms with culls get rows.
 
-    culls = _week(events, dt_from, dt_to).filter(F.col("event_type") == "click")
-    per_user = (
-        culls.withColumn("farm_no", _farm(F.col("user_id")))
+    The per-user counts read the ``user_id`` partitioning as is; one window
+    per farm numbers the users and carries the farm total, which rides on
+    the last user's row as one extra entry.
+    """
+    farm = "OVER (PARTITION BY farm_no)"
+    entry = "named_struct('rn', {}, 'label', {}, 'cnt', {})"
+    item = entry.format("rn", "CAST(user_id AS STRING)", "cnt")
+    total = entry.format("rn + 1", "'ALL'", "total")
+    entries = (
+        tagged.filter(f"event_type = 'click' AND {_in(dt_from, dt_to)}")
         .groupBy("farm_no", "user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.expr("count(1) AS cnt"))
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY farm_no ORDER BY cnt DESC, user_id) AS rn",
+            f"count(1) {farm} AS n",
+            f"sum(cnt) {farm} AS total",
+        )
+        .selectExpr(
+            "farm_no",
+            f"inline(IF(rn = n, array({item}, {total}), array({item})))",
+        )
     )
-    items = per_user.select(
-        "farm_no",
-        F.lit(0).alias("is_total"),
-        F.col("user_id").cast("bigint").alias("uid"),
-        F.col("user_id").cast("string").alias("label"),
-        "cnt",
-    )
-    totals = per_user.groupBy("farm_no").agg(F.sum("cnt").alias("cnt")).select(
-        "farm_no",
-        F.lit(1).alias("is_total"),
-        F.lit(-1).cast("bigint").alias("uid"),
-        F.lit("ALL").alias("label"),
-        "cnt",
-    )
-    # Pinned-tail total order: items by cnt desc then uid, the 'ALL' row
-    # always last. Window is PARTITIONED by farm (lints clean) and its input
-    # is the per-user aggregate — bounded like every report section.
-    w = Window.partitionBy("farm_no").orderBy(
-        "is_total", F.col("cnt").desc(), "uid"
-    )
-    numbered = items.unionByName(totals).withColumn(
-        "rn", F.row_number().over(w)
-    )
-    keyed = numbered.select(
-        "farm_no",
-        (F.floor((F.col("rn") - 1) / DOPE_PER_ROW) + 1).cast("int").alias("sort_no"),
-        (((F.col("rn") - 1) % DOPE_PER_ROW) + 1).cast("int").alias("pos"),
-        "label",
-        "cnt",
-    )
-    aggs = []
+    page = [f"CAST(floor((rn - 1) / {DOPE_PER_ROW}) + 1 AS INT) AS sort_no"]
+    slots = []
     for i in range(1, DOPE_PER_ROW + 1):
-        aggs.append(F.max(F.when(F.col("pos") == i, F.col("label"))).alias(f"str_{i}"))
-        aggs.append(F.max(F.when(F.col("pos") == i, F.col("cnt"))).alias(f"cnt_{i}"))
-    return keyed.groupBy("farm_no", "sort_no").agg(*aggs)
-
-
-def alert_band_section(
-    last_events: DataFrame, base_date: str, farms: DataFrame | None = None
-) -> DataFrame:
-    """gubun='ALERT': days since each sow's last work event, banded by the
-    ALERT_BANDS dim (J9 band join against a broadcast literal), counted per
-    farm with zero-fill (reference ``alert.py`` delayed-sow rules)."""
-    spark = last_events.sparkSession
-    bands = spark.createDataFrame(
-        list(ALERT_BANDS), "sort_no INT, code_1 STRING, lo INT, hi INT"
-    )
-    d = F.date_diff(F.lit(base_date).cast("date"), F.col("event_day"))
-    banded = last_events.withColumn("delay_d", d).join(
-        F.broadcast(bands),
-        (F.col("delay_d") >= F.col("lo")) & (F.col("delay_d") <= F.col("hi")),
-    )
-    counts = (
-        banded.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", "code_1")
-        .agg(F.count(F.lit(1)).alias("cnt_1"))
-    )
-    if farms is None:
-        farms = last_events.select(
-            _farm(F.col("user_id")).alias("farm_no")
-        ).distinct()
-    spine = [(s, c) for s, c, _lo, _hi in ALERT_BANDS]
-    return _zero_filled_counts(counts, farms, spine)
-
-
-def schedule_crosstab_section(
-    last_events: DataFrame, this_from: str, this_to: str
-) -> DataFrame:
-    """gubun='SCHEDULE': plan-rule expansion over the COMING week (UD2) then
-    a per-farm day crosstab — task rows with d1..d7 counts + total (J12;
-    reference ``schedule.py`` calendar)."""
-    from inspig_etl_spark.operators.schedule import expand_schedule, rules_df
-
-    expanded = expand_schedule(
-        last_events,
-        rules_df(last_events.sparkSession),
-        "event_day",
-        this_from,
-        this_to,
-    )
-    day_no = F.date_diff(F.col("pass_dt"), F.lit(this_from).cast("date")) + 1
-    aggs = [
-        F.count(F.when(day_no == i, 1)).alias(f"cnt_{i}") for i in range(1, 8)
-    ]
+        at = f"(rn - 1) % {DOPE_PER_ROW} + 1 = {i}"
+        slots += [f"max(IF({at}, label, NULL)) AS str_{i}", f"max(IF({at}, cnt, NULL)) AS cnt_{i}"]
     return (
-        expanded.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy(
-            "farm_no",
-            F.col("task_seq").alias("sort_no"),
-            F.col("wk_nm").alias("code_1"),
-            F.col("std_cd").alias("str_1"),
-        )
-        .agg(*aggs, F.count(F.lit(1)).alias("cnt_8"))
+        entries.selectExpr("farm_no", "rn", "label", "cnt", *page)
+        .groupBy("farm_no", "sort_no")
+        .agg(*[F.expr(e) for e in slots])
+        .selectExpr("*", "'DOPE' AS gubun", "'LIST' AS sub_gubun")
     )
 
 
-def config_ratio_section(
-    events: DataFrame, dt_to: str = WEEK_TO, farms: DataFrame | None = None
-) -> DataFrame:
-    """gubun='CONFIG': per farm, mating share of work per trailing week —
-    ratio_e4 per week, then the integer mean of the weekly ratios (A18
-    two-stage ratio→mean; reference ``config.py`` per-farm parameter
-    derivation). Integer math end to end: ratios and their mean are exact
-    BIGINTs on both engines (non-negative, so // truncation == floor)."""
-    start = _shift(dt_to, -(7 * CONFIG_WEEKS - 1))
-    d = us_to_day(F.col("ts_us"))
-    wk_no = F.floor(F.date_diff(d, F.lit(start).cast("date")) / 7)
-    weekly = (
-        events.filter(
-            (d >= F.lit(start).cast("date")) & (d <= F.lit(dt_to).cast("date"))
-        )
-        .withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no", wk_no.alias("wk_no"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("gb"),
-            F.count(F.lit(1)).alias("all_cnt"),
-        )
-        .select(
-            "farm_no",
-            "wk_no",
-            F.expr("gb * 10000 DIV all_cnt").alias("ratio_e4"),
-        )
-    )
-    per_farm = weekly.groupBy("farm_no").agg(
-        F.count(F.lit(1)).alias("cnt_1"),
-        F.expr("sum(ratio_e4) DIV count(1)").alias("cnt_2"),
-    )
-    if farms is None:
-        farms = _farm_spine(events)
-    return (
-        farms
-        .join(per_farm, "farm_no", "left")
-        .select(
-            "farm_no",
-            F.lit(1).alias("sort_no"),
-            F.coalesce(F.col("cnt_1"), F.lit(0)).alias("cnt_1"),
-            F.col("cnt_2"),
-        )
-    )
+def _summary(farms: DataFrame, dt_to: str) -> DataFrame:
+    """The grown TS_INS_WEEK row, one per farm with a last event: herd
+    totals, the week's purchases (NVL(SUM, 0) like ``shipment.py:397``),
+    the per-section weekly counters the reference UPDATEs in place
+    (``async_processor.py:150-192``), the coming week's scheduled tasks by
+    family, and the input-delay KPI."""
+    md = {s: f"md_{i}" for i, s in enumerate(STATUS_SPINE, 1)}
 
+    def tasks(family: str | None = None) -> str:
+        return " + ".join(
+            _sched_total(seq)
+            for seq, _g, nm, _std, _pd in DEFAULT_RULES
+            if family in (None, SCHEDULE_FAMILY[nm])
+        )
 
-def farm_summary(
-    last_events_status: DataFrame,
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-) -> DataFrame:
-    """The TS_INS_WEEK-like one-row-per-farm summary: herd totals + week
-    shipment totals, assembled by joins instead of in-place UPDATEs."""
-    herd = (
-        last_events_status.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(
-            F.count(F.lit(1)).alias("total_users"),
-            F.count(F.when(F.col("status_cd") == STATUS_PREGNANT, 1)).alias("pregnant_cnt"),
-            F.count(
-                F.when(
-                    F.col("status_cd").isin(STATUS_NURSING, STATUS_NURSING_SURROGATE), 1
-                )
-            ).alias("nursing_cnt"),
-        )
-    )
-    week = (
-        events.filter(
-            (F.col("event_type") == "purchase")
-            & (us_to_day(F.col("ts_us")) >= F.lit(dt_from).cast("date"))
-            & (us_to_day(F.col("ts_us")) <= F.lit(dt_to).cast("date"))
-        )
-        .withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(
-            F.count(F.lit(1)).alias("week_purchase_cnt"),
-            F.round(dec_sum(F.col("value"), 6), 6).alias("week_purchase_value"),
-        )
-    )
-    return herd.join(week, "farm_no", "left").select(
+    matched = " + ".join(f"sg_{i}" for i in range(1, len(SG_BANDS)))  # all but NONE
+    return farms.filter("n_last > 0").selectExpr(
         "farm_no",
-        "total_users",
-        "pregnant_cnt",
-        "nursing_cnt",
-        F.coalesce(F.col("week_purchase_cnt"), F.lit(0)).alias("week_purchase_cnt"),
-        # NVL(SUM(...), 0) like the reference (shipment.py:397): a farm with
-        # no purchases reports value 0.0, not NULL — cnt and value must
-        # agree about the same fact in one summary row.
-        F.coalesce(F.col("week_purchase_value"), F.lit(0.0)).alias("week_purchase_value"),
-    )
-
-
-def farm_summary_full(
-    last_events: DataFrame,
-    events: DataFrame,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-) -> DataFrame:
-    """The grown TS_INS_WEEK row: herd/shipment base (:func:`farm_summary`)
-    plus the per-section weekly counters the reference UPDATEs in place —
-    LAST_GB/BM/EU/SG/CL counts, WoW farrowing delta, accident match rate,
-    alert total, the coming week's scheduled-task sums by family, and the
-    input-delay KPI (``docs/db/ins/02_TABLE.md:301-459``; processors fill
-    their columns in ``async_processor.py:150-192``). Assembled by LEFT
-    joins on farm_no from the SAME aggregates the wide sections use — each
-    input is a ≤|farms|-row frame, so the join fan is broadcast-cheap."""
-    status = last_events.select(
-        "user_id",
-        status_from_last_event(
-            F.col("wk_gubun"), F.col("sago_gubun_cd"), F.col("daeri_yn"), F.lit(None)
-        ).alias("status_cd"),
-    )
-    base = farm_summary(status, events, dt_from, dt_to)
-
-    d = us_to_day(F.col("ts_us"))
-    wk_counts = (
-        _week(events, dt_from, dt_to)
-        .withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(
-            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("last_gb_cnt"),
-            F.count(F.when(F.col("event_type") == "view", 1)).alias("last_bm_cnt"),
-            F.count(F.when(F.col("event_type") == "signup", 1)).alias("last_eu_cnt"),
-            F.count(F.when(F.col("event_type") == "error", 1)).alias("last_sg_cnt"),
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("last_cl_cnt"),
-        )
-    )
-    prior_from, prior_to = _shift(dt_from, -7), _shift(dt_from, -1)
-    prior_bm = (
-        events.filter(
-            (F.col("event_type") == "view")
-            & (d >= F.lit(prior_from).cast("date"))
-            & (d <= F.lit(prior_to).cast("date"))
-        )
-        .withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(F.count(F.lit(1)).alias("prior_bm_cnt"))
-    )
-    sg_matched = (
-        accident_elapsed_section(events, dt_from, dt_to)
-        .filter(F.col("code_1") != "NONE")
-        .groupBy("farm_no")
-        .agg(F.sum("cnt_1").alias("last_sg_matched_cnt"))
-    )
-    alerts = (
-        alert_band_section(last_events, _shift(dt_to, 1))
-        .filter(F.col("sort_no") >= 3)  # DELAY + CRITICAL
-        .groupBy("farm_no")
-        .agg(F.sum("cnt_1").alias("alert_total"))
-    )
-    sched = schedule_crosstab_section(last_events, _shift(dt_to, 1), _shift(dt_to, 7))
-    sched_rules = {"preg_check_1": "g", "preg_check_2": "g", "pre_farrow_move": "g",
-                   "piglet_care": "b", "wean_plan": "b",
-                   "remate_check": "ef", "recheck": "ef"}
-    fam = F.create_map(*[F.lit(x) for kv in sched_rules.items() for x in kv])
-    this_week = (
-        sched.withColumn("fam", fam[F.col("code_1")])
-        .groupBy("farm_no")
-        .agg(
-            F.sum(F.when(F.col("fam") == "g", F.col("cnt_8"))).alias("this_gb_sum"),
-            F.sum(F.when(F.col("fam") == "b", F.col("cnt_8"))).alias("this_bm_sum"),
-            F.sum(F.when(F.col("fam") == "ef", F.col("cnt_8"))).alias("this_eu_sum"),
-            F.sum("cnt_8").alias("this_total_sum"),
-        )
-    )
-    delay = (
-        last_events.withColumn("farm_no", _farm(F.col("user_id")))
-        .groupBy("farm_no")
-        .agg(
-            F.date_diff(
-                F.lit(_shift(dt_to, 1)).cast("date"), F.max("event_day")
-            ).alias("kpi_delay_day")
-        )
-    )
-
-    out = base
-    for piece in (wk_counts, prior_bm, sg_matched, alerts, this_week, delay):
-        out = out.join(piece, "farm_no", "left")
-    zero = lambda c: F.coalesce(F.col(c), F.lit(0)).alias(c)  # noqa: E731
-    return out.select(
-        "farm_no",
-        "total_users",
-        "pregnant_cnt",
-        "nursing_cnt",
-        "week_purchase_cnt",
-        "week_purchase_value",
-        zero("last_gb_cnt"),
-        zero("last_bm_cnt"),
-        zero("last_eu_cnt"),
-        zero("last_sg_cnt"),
-        zero("last_cl_cnt"),
-        zero("prior_bm_cnt"),
-        (
-            F.coalesce(F.col("last_bm_cnt"), F.lit(0))
-            - F.coalesce(F.col("prior_bm_cnt"), F.lit(0))
-        ).alias("bm_wow_delta"),
-        zero("last_sg_matched_cnt"),
-        zero("alert_total"),
-        zero("this_gb_sum"),
-        zero("this_bm_sum"),
-        zero("this_eu_sum"),
-        zero("this_total_sum"),
-        F.col("kpi_delay_day"),
+        "n_last AS total_users",
+        f"{md[STATUS_PREGNANT]} AS pregnant_cnt",
+        f"{md[STATUS_NURSING]} + {md[STATUS_NURSING_SURROGATE]} AS nursing_cnt",
+        "wk_purchase AS week_purchase_cnt",
+        "coalesce(week_value, CAST(0 AS DOUBLE)) AS week_purchase_value",
+        "wk_purchase AS last_gb_cnt",
+        "wk_view AS last_bm_cnt",
+        "wk_signup AS last_eu_cnt",
+        "wk_error AS last_sg_cnt",
+        "wk_click AS last_cl_cnt",
+        "prior_view AS prior_bm_cnt",
+        "wk_view - prior_view AS bm_wow_delta",
+        f"{matched} AS last_sg_matched_cnt",
+        "alert_3 + alert_4 AS alert_total",  # DELAY + CRITICAL
+        f"{tasks('g')} AS this_gb_sum",
+        f"{tasks('b')} AS this_bm_sum",
+        f"{tasks('ef')} AS this_eu_sum",
+        f"{tasks()} AS this_total_sum",
+        f"date_diff(DATE '{_shift(dt_to, 1)}', last_day_max) AS kpi_delay_day",
     )
 
 
@@ -728,141 +419,25 @@ def build_weekly_report(
     dt_from: str = WEEK_FROM,
     dt_to: str = WEEK_TO,
 ) -> tuple[DataFrame, DataFrame]:
-    """(wide_rows, summary) for every farm in one pair of plans.
+    """(wide_rows, summary) for every farm, from one shared plan.
 
-    ``dt_from``/``dt_to`` (YYYY-MM-DD) scope the period-dependent sections
-    (shipment chart, week purchase totals) — callers that resolve a real
-    period (the CLI runner, the on-demand endpoint) MUST pass it, or every
-    master_seq would silently report the same fixed test week; the module
-    defaults exist for the oracled registry queries, whose DuckDB oracles
-    encode the same constants. Herd-status sections aggregate the latest
-    state and are period-independent, as in the reference.
+    ``dt_from``/``dt_to`` (YYYY-MM-DD) is the report week. Callers that
+    resolve a real period (the CLI runner, the on-demand endpoint) MUST pass
+    it, or every master_seq would report the same fixed test week; the
+    module defaults exist for the oracled registry queries, whose DuckDB
+    oracles encode the same constants. Herd state (MD, ALERT, SCHEDULE, the
+    summary's herd and delay columns) is each sow's last work before the
+    cutoff, midnight after ``dt_to``.
 
-    Callers that consume only ONE side should call
-    :func:`build_weekly_wide` / :func:`build_weekly_summary` directly
-    (r16): building the 10-section union AND the 7-join summary costs
-    seconds of plan construction/analysis per call, and the oracled
-    registry queries each read a single side.
+    Both frames are lazy children of one scan, one per-user window pass and
+    one per-farm aggregate (module docstring); building them runs no Spark
+    job. Each action re-runs the shared part; nothing is cached, because a
+    cache measured as a net loss here (SCALE.md ledger).
     """
-    return (
-        build_weekly_wide(spark, sf_dir, master_seq, dt_from, dt_to),
-        build_weekly_summary(spark, sf_dir, dt_from, dt_to),
+    tagged = _tagged_events(spark, sf_dir, dt_from, dt_to)
+    farms = _farm_aggregate(tagged, dt_from, dt_to)
+    wide = to_wide_rows(_unpivot(farms, dt_from, dt_to), master_seq).unionByName(
+        to_wide_rows(_culling_pages(tagged, dt_from, dt_to), master_seq)
     )
+    return wide, _summary(farms, dt_to)
 
-
-def build_weekly_wide(
-    spark: SparkSession,
-    sf_dir: str,
-    master_seq: int = 1,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """The TS_INS_WEEK_SUB wide-row union alone (see
-    :func:`build_weekly_report`); ``columns`` optionally narrows the padded
-    width (see :func:`to_wide_rows`)."""
-    from inspig_etl_spark.catalog import table
-    from inspig_etl_spark.queries.status_schedule import _last_events
-
-    events = table(spark, sf_dir, "events")
-    # The ten sections share the farm spine frame. Measured A/B at sf0.1
-    # (interleaved, same session): persist()ing the shared spine/last frames
-    # is a net LOSS (~+15%) — the cache materializes every column of the
-    # wide latest-event row and union branches race to populate it, while
-    # the uncached branches recompute in parallel on idle cores for free.
-    # So the frames are shared for plan clarity, not cached.
-    farms = _farm_spine(events)
-    last = _last_events(spark, sf_dir)
-    status = last.select(
-        "user_id",
-        status_from_last_event(
-            F.col("wk_gubun"), F.col("sago_gubun_cd"), F.col("daeri_yn"), F.lit(None)
-        ).alias("status_cd"),
-    )
-    this_from, this_to = _shift(dt_to, 1), _shift(dt_to, 7)
-    sections = [
-        to_wide_rows(herd_status_section(status), master_seq, "MD", "STAT", columns),
-        to_wide_rows(
-            alert_band_section(last, this_from, farms=farms),
-            master_seq,
-            "ALERT",
-            "STAT",
-            columns,
-        ),
-        to_wide_rows(
-            mating_histogram_section(events, dt_from, dt_to, farms=farms),
-            master_seq,
-            "GB",
-            "STAT",
-            columns,
-        ),
-        to_wide_rows(
-            farrowing_wow_section(events, dt_from, dt_to, farms=farms),
-            master_seq,
-            "BM",
-            "STAT",
-            columns,
-        ),
-        to_wide_rows(
-            weaning_next_event_section(events, dt_from, dt_to, farms=farms),
-            master_seq,
-            "EU",
-            "STAT",
-            columns,
-        ),
-        to_wide_rows(
-            accident_elapsed_section(events, dt_from, dt_to, farms=farms),
-            master_seq,
-            "SG",
-            "STAT",
-            columns,
-        ),
-        to_wide_rows(
-            culling_pages_section(events, dt_from, dt_to),
-            master_seq,
-            "DOPE",
-            "LIST",
-            columns,
-        ),
-        to_wide_rows(
-            shipment_chart_section(events, dt_from, dt_to),
-            master_seq,
-            "SH",
-            "CHART",
-            columns,
-        ),
-        to_wide_rows(
-            schedule_crosstab_section(last, this_from, this_to),
-            master_seq,
-            "SCHEDULE",
-            "ROW",
-            columns,
-        ),
-        to_wide_rows(
-            config_ratio_section(events, dt_to, farms=farms),
-            master_seq,
-            "CONFIG",
-            "STAT",
-            columns,
-        ),
-    ]
-    wide = sections[0]
-    for s in sections[1:]:
-        wide = wide.unionByName(s)
-    return wide
-
-
-def build_weekly_summary(
-    spark: SparkSession,
-    sf_dir: str,
-    dt_from: str = WEEK_FROM,
-    dt_to: str = WEEK_TO,
-) -> DataFrame:
-    """The grown TS_INS_WEEK summary row alone (see
-    :func:`build_weekly_report`)."""
-    from inspig_etl_spark.catalog import table
-    from inspig_etl_spark.queries.status_schedule import _last_events
-
-    events = table(spark, sf_dir, "events")
-    last = _last_events(spark, sf_dir)
-    return farm_summary_full(last, events, dt_from, dt_to)

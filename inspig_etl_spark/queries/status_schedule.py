@@ -10,10 +10,10 @@ accident code from the event value) drive every branch of the truth table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inspig_etl_spark.catalog import table
+from inspig_etl_spark.catalog import events_before
 from inspig_etl_spark.functions.dates import us_to_day
 from inspig_etl_spark.operators.events import latest_per_key
 from inspig_etl_spark.operators.schedule import (
@@ -43,7 +43,13 @@ _SQL_SAGO = (
     f"CASE WHEN value < 50 THEN '{ACCIDENT_RECURRENCE}' ELSE '{ACCIDENT_ABORTION}' END"
 )
 
-_SQL_LAST_EVENT = f"""
+
+def sql_last_event(cutoff: str) -> str:
+    """The ``last`` CTE: each user's latest non-click event before midnight
+    of ``cutoff`` (YYYY-MM-DD) — the DuckDB twin of :func:`_last_events`
+    (at ``BASE_DATE``) and of the weekly report's last events (at the
+    report cutoff)."""
+    return f"""
 last AS (
   SELECT user_id, wk_gubun, event_day, sago_gubun_cd, daeri_yn
   FROM (
@@ -54,34 +60,32 @@ last AS (
            {_SQL_DAERI} AS daeri_yn,
            ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
     FROM events
-    WHERE ts < TIMESTAMP '{BASE_DATE} 00:00:00' AND event_type <> 'click'
+    WHERE ts < TIMESTAMP '{cutoff} 00:00:00' AND event_type <> 'click'
   ) WHERE rn = 1
 )"""
 
 
-def _last_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events").filter(
-        (F.col("ts_us") < F.lit(_us(BASE_DATE))) & (F.col("event_type") != "click")
-    )
-    last = latest_per_key(ev, keys=["user_id"], order_by=["ts_us", "event_id"])
-    return last.select(
-        "user_id",
+_SQL_LAST_EVENT = sql_last_event(BASE_DATE)
+
+
+def last_event_columns() -> list[Column]:
+    """The last-work attributes of an events row (the mapping documented
+    above): work code, event day, accident sub-code, surrogate flag."""
+    return [
         wk_gubun_from_event_type(F.col("event_type")).alias("wk_gubun"),
         us_to_day(F.col("ts_us")).alias("event_day"),
         F.when(F.col("value") < 50, ACCIDENT_RECURRENCE)
         .otherwise(ACCIDENT_ABORTION)
         .alias("sago_gubun_cd"),
         F.when(F.col("user_id") % 2 == 0, "Y").otherwise("N").alias("daeri_yn"),
-    )
+    ]
 
 
-def _us(day: str) -> int:
-    """Epoch-microseconds of midnight UTC of a yyyy-mm-dd day (driver-side
-    constant — keeps the filter pure integer math on ts_us)."""
-    import datetime as dt
-
-    d = dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc)
-    return int(d.timestamp()) * 1_000_000
+def _last_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's latest non-click event before ``BASE_DATE``."""
+    ev = events_before(spark, sf_dir, BASE_DATE).filter(F.col("event_type") != "click")
+    last = latest_per_key(ev, keys=["user_id"], order_by=["ts_us", "event_id"])
+    return last.select("user_id", *last_event_columns())
 
 
 @register(

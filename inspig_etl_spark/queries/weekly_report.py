@@ -3,16 +3,17 @@
 TS_INS_WEEK_SUB GUBUN taxonomy — ``async_processor.py:150-192``,
 ``docs/db/ins/02_TABLE.md:301-459``) and the grown per-farm summary row.
 
-Every section's DuckDB CTE mirrors its Spark kernel expression-for-
-expression; all counters are integers and the one float column (SH val_1)
-goes through the shared decimal-sum convention, so the union hashes
-bit-identically across engines.
+The oracles compute every section on its own — spines, zero-fill joins,
+an as-of window, a band join — while the Spark pipeline derives them all
+from one per-farm aggregate, so agreement checks the single-pass plan
+against an independent formulation. All counters are integers and the one
+float column (SH val_1) goes through the shared decimal-sum convention, so
+the union hashes bit-identically across engines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from inspig_etl_spark.functions.rounding import sql_dec_sum
 from inspig_etl_spark.pipelines.weekly import (
@@ -26,19 +27,12 @@ from inspig_etl_spark.pipelines.weekly import (
     WEEK_FROM,
     WEEK_TO,
     _shift,
-    build_weekly_summary,
-    build_weekly_wide,
+    build_weekly_report,
 )
 from inspig_etl_spark.queries import register
-from inspig_etl_spark.queries.status_schedule import (
-    _SQL_LAST_EVENT,
-)
+from inspig_etl_spark.queries.status_schedule import sql_last_event
 from inspig_etl_spark.operators.schedule import sql_rules_values
 from inspig_etl_spark.operators.status import sql_status_from_last_event
-
-PRIOR_FROM, PRIOR_TO = _shift(WEEK_FROM, -7), _shift(WEEK_FROM, -1)
-THIS_FROM, THIS_TO = _shift(WEEK_TO, 1), _shift(WEEK_TO, 7)
-CONFIG_FROM = _shift(WEEK_TO, -(7 * CONFIG_WEEKS - 1))
 
 _SQL_STATUS = f"""
 status AS (
@@ -63,9 +57,18 @@ purch AS (
 )"""
 
 
-_SQL_WEEK_PURCHASES = _sql_week_purchases(WEEK_FROM, WEEK_TO)
-
-_SQL_FARMS = "farms AS (SELECT DISTINCT user_id % 10 AS farm_no FROM events)"
+def _sql_head(wf: str, wt: str) -> str:
+    """The CTEs every report oracle starts from: the last events and the
+    farms, both as of the report cutoff (midnight after ``wt``), then the
+    section counts."""
+    cutoff = _shift(wt, 1)
+    return f"""
+WITH {sql_last_event(cutoff)}, {_SQL_STATUS}, {_sql_week_purchases(wf, wt)},
+farms AS (
+  SELECT DISTINCT user_id % 10 AS farm_no FROM events
+  WHERE ts < TIMESTAMP '{cutoff} 00:00:00'
+),
+{_sql_section_ctes(wf, wt)}"""
 
 _GB_SPINE = ", ".join(f"({i + 1}, '{b}')" for i, b in enumerate(GB_BUCKETS))
 _EU_SPINE = ", ".join(f"({i + 1}, '{t}')" for i, t in enumerate(EU_NEXT_TYPES))
@@ -163,7 +166,6 @@ dope_numbered AS (
   FROM dope_items
 ),
 alert_bands(sort_no, code_1, lo, hi) AS (VALUES {_ALERT_SPINE}),
-alert_farms AS (SELECT DISTINCT user_id % 10 AS farm_no FROM last),
 alert_counts AS (
   SELECT user_id % 10 AS farm_no, b.code_1, COUNT(*) AS cnt
   FROM last JOIN alert_bands b
@@ -205,17 +207,13 @@ cfg_per AS (
 )"""
 
 
-_SQL_SECTION_CTES = _sql_section_ctes(WEEK_FROM, WEEK_TO)
-
-
 def sections_oracle_sql(wf: str, wt: str) -> str:
     """The full TS_INS_WEEK_SUB wide-row oracle for an ARBITRARY report
     week — the batch query below instantiates it at (WEEK_FROM, WEEK_TO);
     the on-demand single-farm query (queries/on_demand.py) reuses it at
     its own Mon..Sun period."""
-    return f"""
-WITH {_SQL_LAST_EVENT}, {_SQL_STATUS}, {_SQL_SPINE}, {_sql_week_purchases(wf, wt)},
-{_SQL_FARMS}, {_sql_section_ctes(wf, wt)},
+    return f"""{_sql_head(wf, wt)},
+{_SQL_SPINE},
 md AS (
   SELECT md_farms.farm_no, 'MD' AS gubun, 'STAT' AS sub_gubun, spine.sort_no,
          spine.status_cd AS code_1,
@@ -229,12 +227,12 @@ md AS (
                    AND counts.status_cd = spine.status_cd
 ),
 alert AS (
-  SELECT alert_farms.farm_no, 'ALERT', 'STAT', b.sort_no, b.code_1,
+  SELECT farms.farm_no, 'ALERT', 'STAT', b.sort_no, b.code_1,
          NULL, NULL, NULL,
          COALESCE(c.cnt, 0), NULL, NULL, NULL, NULL, NULL, NULL, NULL,
          CAST(NULL AS DOUBLE)
-  FROM alert_farms CROSS JOIN alert_bands b
-  LEFT JOIN alert_counts c ON c.farm_no = alert_farms.farm_no AND c.code_1 = b.code_1
+  FROM farms CROSS JOIN alert_bands b
+  LEFT JOIN alert_counts c ON c.farm_no = farms.farm_no AND c.code_1 = b.code_1
 ),
 gb AS (
   SELECT farms.farm_no, 'GB', 'STAT', s.sort_no, s.code_1,
@@ -335,31 +333,19 @@ UNION ALL SELECT * FROM config
     oracle=sections_oracle_sql(WEEK_FROM, WEEK_TO),
 )
 def weekly_report_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Build ONLY the wide side, padded only to the 17 columns this query
-    # reads (r16): the full-width pair build cost ~6.6 s of driver plan
-    # construction/analysis per call — 10 union branches x 35 dead NULL
-    # projections plus the unused 7-join summary — for identical output.
     cols = [
         "farm_no", "gubun", "sub_gubun", "sort_no", "code_1",
         "str_1", "str_2", "str_3",
         "cnt_1", "cnt_2", "cnt_3", "cnt_4", "cnt_5", "cnt_6", "cnt_7", "cnt_8",
         "val_1",
     ]
-    wide = build_weekly_wide(spark, sf_dir, columns=cols)
-    return wide.select(*cols)
+    return build_weekly_report(spark, sf_dir)[0].select(*cols)
 
 
-@register(
-    "weekly_report_summary",
-    operators=(
-        "pipeline,A20,A17 (the grown TS_INS_WEEK row: herd + shipment + "
-        "per-section weekly counters + WoW + alert gate + coming-week "
-        "schedule sums + input-delay KPI; ref TS_INS_WEEK docs/db/ins/"
-        "02_TABLE.md:301-459, async_processor.py:150-192)"
-    ),
-    oracle=f"""
-WITH {_SQL_LAST_EVENT}, {_SQL_STATUS}, {_SQL_WEEK_PURCHASES}, {_SQL_FARMS},
-{_SQL_SECTION_CTES},
+def summary_oracle_sql(wf: str, wt: str) -> str:
+    """The TS_INS_WEEK summary oracle for an ARBITRARY report week (the
+    registry query below instantiates it at (WEEK_FROM, WEEK_TO))."""
+    return f"""{_sql_head(wf, wt)},
 herd AS (
   SELECT farm_no,
          COUNT(*) AS total_users,
@@ -374,7 +360,7 @@ week AS (
          ROUND({sql_dec_sum('value', 6)}, 6) AS week_purchase_value
   FROM events
   WHERE event_type = 'purchase'
-    AND CAST(ts AS DATE) BETWEEN DATE '{WEEK_FROM}' AND DATE '{WEEK_TO}'
+    AND CAST(ts AS DATE) BETWEEN DATE '{wf}' AND DATE '{wt}'
   GROUP BY 1
 ),
 wk_counts AS (
@@ -385,14 +371,14 @@ wk_counts AS (
          COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS last_sg_cnt,
          COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS last_cl_cnt
   FROM events
-  WHERE CAST(ts AS DATE) BETWEEN DATE '{WEEK_FROM}' AND DATE '{WEEK_TO}'
+  WHERE CAST(ts AS DATE) BETWEEN DATE '{wf}' AND DATE '{wt}'
   GROUP BY 1
 ),
 prior_bm AS (
   SELECT user_id % 10 AS farm_no, COUNT(*) AS prior_bm_cnt
   FROM events
   WHERE event_type = 'view'
-    AND CAST(ts AS DATE) BETWEEN DATE '{PRIOR_FROM}' AND DATE '{PRIOR_TO}'
+    AND CAST(ts AS DATE) BETWEEN DATE '{_shift(wf, -7)}' AND DATE '{_shift(wf, -1)}'
   GROUP BY 1
 ),
 sg_matched AS (
@@ -419,7 +405,7 @@ this_week AS (
 ),
 delay AS (
   SELECT user_id % 10 AS farm_no,
-         date_diff('day', MAX(event_day), DATE '{THIS_FROM}') AS kpi_delay_day
+         date_diff('day', MAX(event_day), DATE '{_shift(wt, 1)}') AS kpi_delay_day
   FROM last GROUP BY 1
 )
 SELECT herd.farm_no, total_users, pregnant_cnt, nursing_cnt,
@@ -449,9 +435,18 @@ LEFT JOIN sg_matched ON herd.farm_no = sg_matched.farm_no
 LEFT JOIN alerts ON herd.farm_no = alerts.farm_no
 LEFT JOIN this_week ON herd.farm_no = this_week.farm_no
 LEFT JOIN delay ON herd.farm_no = delay.farm_no
-""",
+"""
+
+
+@register(
+    "weekly_report_summary",
+    operators=(
+        "pipeline,A20,A17 (the grown TS_INS_WEEK row: herd + shipment + "
+        "per-section weekly counters + WoW + alert gate + coming-week "
+        "schedule sums + input-delay KPI; ref TS_INS_WEEK docs/db/ins/"
+        "02_TABLE.md:301-459, async_processor.py:150-192)"
+    ),
+    oracle=summary_oracle_sql(WEEK_FROM, WEEK_TO),
 )
 def weekly_report_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Summary side only (r16) — the 10-section wide union build is dead
-    # weight for this query.
-    return build_weekly_summary(spark, sf_dir)
+    return build_weekly_report(spark, sf_dir)[1]

@@ -197,6 +197,28 @@ def _dashed(yyyymmdd: str) -> str:
     return f"{yyyymmdd[:4]}-{yyyymmdd[4:6]}-{yyyymmdd[6:]}"
 
 
+def _land(spark, df, path: str, seq: int, keys: list[str]) -> int:
+    """Land ``df`` at ``path`` through the staged swap and return how many
+    of its rows belong to week ``seq``.
+
+    The rows are counted while they are written (``observe``), not by
+    reading the table back. The table lands as one file sorted by
+    (master_seq, *keys) — a unique key — so the same input always gives
+    the same file set and bytes, whatever partitioning the plan ran with.
+    """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from inspig_etl_spark.sources.sinks import staged_overwrite
+
+    written = Observation()
+    counted = df.observe(written, F.count_if(F.col("master_seq") == seq).alias("rows"))
+    staged_overwrite(
+        spark, counted.repartition(1).sortWithinPartitions("master_seq", *keys), path
+    )
+    return written.get["rows"]
+
+
 def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list[dict]:
     """The weekly command: one report build per resolved date, landed with
     the reference's delete policy and a manifest per run."""
@@ -205,11 +227,7 @@ def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list
     from pyspark.sql import functions as F
 
     from inspig_etl_spark.pipelines.weekly import build_weekly_report
-    from inspig_etl_spark.sources.sinks import (
-        read_or_empty,
-        replace_by_key,
-        staged_overwrite,
-    )
+    from inspig_etl_spark.sources.sinks import read_or_empty, replace_by_key
     from inspig_etl_spark.streaming.incremental import RunManifest
 
     out = plan["output"]
@@ -264,12 +282,10 @@ def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list
 
             # ST3: both tables land via atomic staged swap — a rerun after a
             # mid-write failure sees the previous complete state.
-            staged_overwrite(spark, wide_final, wide_path)
-            n_wide = spark.read.parquet(wide_path).filter(F.col("master_seq") == seq).count()
+            n_wide = _land(spark, wide_final, wide_path, seq, ["farm_no", "gubun", "sort_no"])
             manifest.record_step("weekly_wide", "COMPLETE", n_wide, int((time.time() - t0) * 1000))
             t1 = time.time()
-            staged_overwrite(spark, sum_final, sum_path)
-            n_sum = spark.read.parquet(sum_path).filter(F.col("master_seq") == seq).count()
+            n_sum = _land(spark, sum_final, sum_path, seq, ["farm_no"])
             manifest.record_step("weekly_summary", "COMPLETE", n_sum, int((time.time() - t1) * 1000))
             manifest.finish("COMPLETE")
             results.append(

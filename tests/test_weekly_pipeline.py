@@ -175,3 +175,91 @@ def test_all_ten_sections_compose(spark):
     for col in ("alert_total", "bm_wow_delta", "this_total_sum", "kpi_delay_day"):
         assert col in summary.columns
     assert all(r.bm_wow_delta == r.last_bm_cnt - r.prior_bm_cnt for r in srows)
+
+
+def _next_job_id(spark) -> int:
+    v = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return v if isinstance(v, int) else v.get()
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_report_plan_shape(spark):
+    """The shared single-pass plan: building both reports launches no Spark
+    job, and together they stay at a handful of scans and shuffles with no
+    nested-loop join. The on-demand path's farm predicate reaches every
+    events scan."""
+    from inspig_etl_spark.pipelines.on_demand import run_single_farm
+
+    before = _next_job_id(spark)
+    wide, summary = build_weekly_report(spark, SF_SMOKE, master_seq=3)
+    assert _next_job_id(spark) == before
+    plans = [_physical(wide), _physical(summary)]
+    assert sum(p.count("FileScan") for p in plans) <= 4
+    assert sum(p.count("Exchange") for p in plans) <= 20
+    assert not any("BroadcastNestedLoopJoin" in p for p in plans)
+
+    res = run_single_farm(spark, SF_SMOKE, farm_no=3, ins_date="20240124", cache_results=False)
+    for df in (res["wide_rows"], res["summary"]):
+        lines = _physical(df).splitlines()
+        scans = [i for i, line in enumerate(lines) if "FileScan" in line]
+        assert scans
+        for i in scans:
+            assert "Filter" in lines[i - 1] and "% 10) = 3)" in lines[i - 1], lines[i - 1]
+
+
+def test_footer_schema_matches_spark_inference(spark, tmp_path):
+    """The events schema read from the parquet footer (so building a report
+    runs no inference job) is the schema Spark itself infers, for every
+    timestamp encoding the test tables have shipped with."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from inspig_etl_spark.catalog import footer_schema
+
+    encodings = {
+        "ns": (pa.timestamp("ns"), {"version": "2.6"}),
+        "ns_utc": (pa.timestamp("ns", tz="UTC"), {"version": "2.6"}),
+        "us": (pa.timestamp("us"), {}),
+        "us_utc": (pa.timestamp("us", tz="UTC"), {}),
+        "ms": (pa.timestamp("ms"), {}),
+        "int96": (pa.timestamp("ns"), {"use_deprecated_int96_timestamps": True}),
+    }
+    for name, (ts_type, opts) in encodings.items():
+        path = str(tmp_path / f"{name}.parquet")
+        table = pa.table({
+            "event_id": pa.array([1], pa.int64()),
+            "ts": pa.array([0], ts_type),
+            "event_type": pa.array(["view"], pa.string()),
+            "value": pa.array([1.5], pa.float64()),
+        })
+        pq.write_table(table, path, **opts)
+        assert footer_schema(path) == spark.read.parquet(path).schema, name
+
+
+def test_reports_match_oracle_off_the_default_week(spark):
+    """Parity at the benchmark's cold week (2024-01-01..07), not only at the
+    module's fixed week: herd state, alert delays and the coming week's
+    schedule all move with the report period."""
+    from inspig_etl_spark.queries.weekly_report import (
+        sections_oracle_sql,
+        summary_oracle_sql,
+    )
+    from tests.conftest import SF_CORRECT
+    from tests.parity import compare, run_oracle
+
+    wf, wt = "2024-01-01", "2024-01-07"
+    wide, summary = build_weekly_report(spark, SF_CORRECT, master_seq=1, dt_from=wf, dt_to=wt)
+    cols = [
+        "farm_no", "gubun", "sub_gubun", "sort_no", "code_1", "str_1", "str_2", "str_3",
+        *[f"cnt_{i}" for i in range(1, 9)], "val_1",
+    ]
+    compare("sections@2024-01-01", wide.select(*cols), *run_oracle(sections_oracle_sql(wf, wt), SF_CORRECT))
+    compare("summary@2024-01-01", summary, *run_oracle(summary_oracle_sql(wf, wt), SF_CORRECT))
+    # The herd-state cutoff follows the period: no last event lies after
+    # the week, and tasks fall due in the coming week.
+    rows = summary.collect()
+    assert rows and all(r.kpi_delay_day >= 0 for r in rows)
+    assert sum(r.this_total_sum for r in rows) > 0
